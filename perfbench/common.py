@@ -25,9 +25,11 @@ def start_session(work: str):
     # every JVM the session starts (launcher and driver) keeps its temp
     # files in the run's directory and writes no /tmp/hsperfdata entry
     os.environ["JAVA_TOOL_OPTIONS"] = f"-XX:-UsePerfData -Djava.io.tmpdir={local}"
-    # a 2 GB heap: the workloads' tables are small, and a fixed, reachable
-    # cap keeps the JVM's peak RSS from depending on when G1 grows the heap
-    os.environ["ROOK_SPARK_DRIVER_MEM"] = "2g"
+    # a 1 GB heap, committed and touched at start: the workloads' tables
+    # are small, and a heap that never resizes keeps the JVM's peak RSS
+    # from depending on when G1 grows it, so peak RSS moves with the
+    # memory outside the heap (driver, Arrow buffers, metaspace, threads)
+    os.environ["ROOK_SPARK_DRIVER_MEM"] = "1g"
     from rook_spark.session import get_spark
 
     spark = get_spark(
@@ -36,6 +38,7 @@ def start_session(work: str):
         extra_conf={
             # the carriage-return progress bar corrupts line-based output
             "spark.ui.showConsoleProgress": "false",
+            "spark.driver.extraJavaOptions": "-Xms1g -XX:+AlwaysPreTouch",
             "spark.local.dir": local,
             "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
             # keep every job/stage of a run for span attribution

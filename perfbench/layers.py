@@ -16,37 +16,41 @@ from spans import SpanIndex
 PER_LAYER = [
     # -> epoch_s_p50 on serve and tail
     ("cdc.engine.replay_s", "s"), ("cdc.engine.epochs", "count"),
-    # -> epoch_s_p50 (and freshness) on tail
+    # -> epoch_s_p50 and latency_s_p50 (freshness) on tail; a fallback is
+    # a second pass over an epoch's input, so it should stay 0
     ("cdc.apply.apply_batch_s", "s"), ("cdc.apply.spark_jobs", "count"),
     ("cdc.apply.obs_fallbacks", "count"),
-    # -> events_per_s on backfill
+    # -> epoch_s_p50 on tail and serve
     ("cdc.apply.shuffle_write_bytes", "bytes"), ("cdc.apply.tasks", "count"),
     ("cdc.apply.task_s", "s"), ("cdc.apply.gc_s", "s"),
-    # -> events_per_s on backfill, and space_amp
-    ("lake.table.merge_s", "s"), ("lake.table.output_bytes", "bytes"),
-    ("lake.table.files_written", "count"), ("lake.table.write_amp", "ratio"),
+    # -> space_amp, and epoch_s_p50 on tail
+    ("lake.table.output_bytes", "bytes"), ("lake.table.files_written", "count"),
+    ("lake.table.write_amp", "ratio"),
     # -> epoch_s_p50 on tail
     ("lake.table.merge_mor_s", "s"), ("lake.table.snapshot_calls", "count"),
     ("lake.table.snapshot_s", "s"),
-    # -> epoch_s_p90 / freshness_s_p90 on tail, read_s_p90 on serve
+    # -> epoch_s_p90 and freshness_s_p90 on tail, read_mix_s on serve
     ("lake.table.compact_s", "s"), ("lake.table.compactions", "count"),
-    # -> read_s on serve
+    # -> latency_s_p50 (read_mix_s) on serve
     ("lake.table.read_s", "s"), ("lake.table.row_count_s", "s"),
     ("lake.table.changes_s", "s"), ("lake.table.read_input_bytes", "bytes"),
     ("lake.table.delta_depth_max", "count"),
-    # -> epoch_s_p50 on tail, read_s_p50 on serve
+    # -> epoch_s_p50 on tail, latency_s_p50 (read_mix_s) on serve
     ("lake.metastore.read_calls", "count"), ("lake.metastore.read_blob_calls", "count"),
     ("lake.metastore.commit_s", "s"), ("lake.metastore.put_blob_bytes", "bytes"),
-    # -> freshness_s on tail
+    # -> latency_s_p50 (freshness) on tail
     ("sources.trigger_s", "s"), ("sources.latest_offset_s", "s"),
     ("sources.wal_commit_s", "s"), ("sources.backlog_files_max", "count"),
     ("sources.generator_late_s_max", "s"),
-    # -> epoch_s_p50 on serve
+    # -> epoch_s_p50 on serve; the index is a copy-on-write table, so its
+    # merge is the workloads' only LakeTable.merge (copy-on-write) path
     ("cdc.fulltext.sink_s", "s"), ("cdc.fulltext.merge_s", "s"),
     ("cdc.fulltext.spark_jobs", "count"),
-    # -> read_s_p50 on serve
+    # -> latency_s_p50 (read_mix_s) on serve
     ("cdc.fulltext.lookup_s", "s"),
-    # whole session, for counts that must repeat exactly between runs
+    # whole session, for counts that must repeat exactly between runs;
+    # persisted RDDs left after the run are cache leaks (the engine
+    # persists each epoch's input while sinks are attached)
     ("spark.jobs", "count"), ("spark.tasks", "count"),
     ("spark.shuffle_write_bytes", "bytes"), ("spark.persisted_rdds", "count"),
 ]
@@ -102,7 +106,6 @@ def layer_metrics(run, spans: list[dict], obs_fallbacks: int) -> dict[str, dict]
     out["cdc.apply.task_s"] = ix.total(applies, "task_ms") / 1000.0
     out["cdc.apply.gc_s"] = ix.total(applies, "gc_ms") / 1000.0
 
-    out["lake.table.merge_s"] = ix.duration(on_main("lake.table.merge"))
     out["lake.table.merge_mor_s"] = ix.duration(on_main("lake.table.merge_mor"))
     compacts = on_main("lake.table.compact")
     out["lake.table.compact_s"] = ix.duration(compacts)

@@ -1,14 +1,12 @@
 #!/usr/bin/env python3
 """CDC benchmark: one workload, one seed, one run.
 
-    python3 perfbench/run.py --workload {backfill,tail,serve} --seed N \
+    python3 perfbench/run.py --workload {tail,serve} --seed N \
         --seconds S --trace {0,1}
 
-Run from the repository root. BENCHMARK.json lists ``tail`` and
-``serve``; ``backfill`` (bulk copy-on-write sync) runs the same way by
-hand. The run generates its change-event log from
-the seed with ``rook_spark.cdc.fixtures.generate_events``, drives the
-engine through its public API (``CdcEngine``, ``LakeTable``,
+Run from the repository root. The run generates its change-event log
+from the seed with ``rook_spark.cdc.fixtures.generate_events``, drives
+the engine through its public API (``CdcEngine``, ``LakeTable``,
 ``InvertedIndex``), and gates the final table against the DuckDB replay
 oracle. Everything it writes stays under ``.perfbench_work/`` (removed at
 the end) and ``.perfbench_out/`` (reports and span dumps) in the
@@ -25,21 +23,23 @@ every workload):
 
 - ``setup_s``: Spark session start + log generation + table preload
   (serve: through the index sink) + untimed warm-up, measured once.
-- ``events_per_s``: change events applied per second of epoch time.
-- ``epoch_s_p50``: median epoch latency (backfill: one replay epoch;
-  tail: the streaming trigger; serve: the ``CdcEngine.replay`` call).
-- ``latency_s_p50``: median of what the workload's user waits for
-  (backfill: a whole backfill; tail: freshness, from a chunk's scheduled
-  release to the ``committed_at`` of the snapshot that applied it;
-  serve: one read of the read mix).
+- ``epoch_s_p50``: median epoch latency (tail: the streaming trigger;
+  serve: the ``CdcEngine.replay`` call).
+- ``latency_s_p50``: median of what the workload's user waits for. On
+  tail it is the report's ``freshness_s_p50``: from a chunk's scheduled
+  release to the ``committed_at`` of the snapshot that applied it. On
+  serve it is the report's ``read_mix_s_p50``: one pass over the read
+  mix.
 - ``peak_rss_mb``: peak RSS of this Python driver plus the Spark JVM.
+  The JVM's 1 GB heap is committed and touched at start, so the metric
+  moves with the memory outside the heap.
 - ``space_amp``: bytes of the files the final snapshot references over
   bytes of the final state's payload columns.
 
-The report line also carries the workload's own names for these
-(``freshness_s_*``, ``read_s_*`` per read kind) and ``*_p90`` values; a
-run has far fewer than the hundred samples a p90 with ten samples beyond
-it needs, so only medians are in the result line. Failed operations
+The report line also has ``*_p90`` values, each timing's raw samples
+and, on serve, each read kind's latency (``read_<kind>_s_*``); a run
+has far fewer than the hundred samples a p90 with ten samples beyond it
+needs, so only medians are in the result line. Failed operations
 (epochs, reads, the oracle gate) are counted in ``failed`` out of
 ``attempted``; their ratio is the report's ``error_rate``.
 
@@ -62,19 +62,19 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 sys.path.insert(0, ROOT)
 
-E2E = [
-    ("setup_s", "s"),
-    ("events_per_s", "1/s"),
-    ("epoch_s_p50", "s"),
-    ("latency_s_p50", "s"),
-    ("peak_rss_mb", "MB"),
-    ("space_amp", "ratio"),
-]
+# end-to-end metric -> the report metric it is, per workload
+E2E = {
+    "setup_s": ("s", {}),
+    "epoch_s_p50": ("s", {}),
+    "latency_s_p50": ("s", {"tail": "freshness_s_p50", "serve": "read_mix_s_p50"}),
+    "peak_rss_mb": ("MB", {}),
+    "space_amp": ("ratio", {}),
+}
 
 
 def parse_args(argv=None):
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("--workload", required=True, choices=["backfill", "tail", "serve"])
+    ap.add_argument("--workload", required=True, choices=["tail", "serve"])
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=int, default=10)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
@@ -112,10 +112,12 @@ def main(argv=None) -> int:
         run.metric("error_rate", run.failed / max(run.attempted, 1), "ratio", run.attempted)
         report = {
             "workload": args.workload, "seed": args.seed, "seconds": args.seconds,
-            "trace": args.trace, "metrics": run.metrics, "checks": run.checks,
+            "trace": args.trace, "metrics": run.metrics, "samples": run.samples,
+            "checks": run.checks,
             "setup": {"session_s": session_s, **parts},
             "timed_s": run.extra.get("timed_s"), "errors": run.errors[:20],
             "persisted_rdds": run.extra.get("persisted_rdds"),
+            "peak_rss_mb": run.extra.get("peak_rss_mb"),
         }
         if tracer is not None:
             tracer.unwrap_all()
@@ -129,8 +131,9 @@ def main(argv=None) -> int:
         else:
             with open(os.path.join(out_dir, f"{tag}-trace0.json"), "w") as fh:
                 json.dump(report, fh)
-            metrics = {name: {"value": run.metrics[name]["value"], "unit": unit}
-                       for name, unit in E2E}
+            metrics = {name: {"value": run.metrics[of.get(args.workload, name)]["value"],
+                              "unit": unit}
+                       for name, (unit, of) in E2E.items()}
     finally:
         if spark is not None:
             stop_session(spark)

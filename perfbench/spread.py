@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Run-to-run spread of the end-to-end metrics.
 
-    python3 perfbench/spread.py --workload tail --seeds 1-10 --seconds 10
+    python3 perfbench/spread.py --workload tail --seeds 1-10
 
 Runs ``run.py`` once per seed (one after another, so runs never share the
 machine), then prints, per end-to-end metric, the median and the distance

@@ -1,4 +1,4 @@
-"""The CDC workloads: ``backfill``, ``tail`` and ``serve``.
+"""The CDC workloads: ``tail`` and ``serve``.
 
 Each workload builds its inputs from the seed, sets up (session start,
 log generation, table preparation, untimed warm-up), runs a fixed amount
@@ -7,9 +7,12 @@ DuckDB oracle outside the timed region.
 Work is sized, not time-boxed, so one seed always does the same work and
 the traced run's counts repeat exactly.
 
-Sizes are set for a 4-vCPU host; the NOMINAL_* constants convert
-``--seconds`` into a number of work units at roughly the speed of that
-host.
+Sizes are set for a 4-vCPU host, where an epoch of either workload costs
+about a second of fixed Spark work whatever its size; the nominal
+durations below convert ``--seconds`` into a number of work units at
+roughly the speed of that host. Both workloads time a whole number of
+merge-on-read compaction periods, so every run's samples have the same
+mix of compacting and plain epochs and the medians fall on plain ones.
 """
 
 from __future__ import annotations
@@ -41,6 +44,7 @@ class Run:
         self.failed = 0
         self.errors: list[str] = []
         self.metrics: dict[str, dict] = {}   # every metric of the report line
+        self.samples: dict[str, list[float]] = {}
         self.checks: dict[str, dict] = {}
         self.setup_parts: dict[str, float] = {}
         self.extra: dict[str, object] = {}
@@ -63,6 +67,7 @@ class Run:
         self.metrics[name] = {"value": value, "unit": unit, "n": n}
 
     def timed_metric(self, name: str, values: list[float]) -> None:
+        self.samples[name] = values
         t = timing(values)
         self.metric(f"{name}_p50", t["p50"], "s", t["n"])
         self.metric(f"{name}_p90", t["p90"], "s", t["n"])
@@ -82,7 +87,9 @@ class Run:
         """Peak memory (read before the oracle runs in this process), the
         oracle gate over ``log_files``, space amplification and the
         persisted-RDD count, all outside the timed region."""
-        self.metric("peak_rss_mb", peak_rss_mb([os.getpid(), jvm_pid()]), "MB")
+        driver, jvm = peak_rss_mb([os.getpid()]), peak_rss_mb([jvm_pid()])
+        self.metric("peak_rss_mb", driver + jvm, "MB")
+        self.extra["peak_rss_mb"] = {"driver": driver, "jvm": jvm}
         self.attempted += 1
         res = self.checks["final_state"] = oracle_gate(table, log_files, self.work)
         if not res["ok"]:
@@ -145,75 +152,22 @@ def _span(run: Run, name: str):
     return run.tracer.span(name)
 
 
-# ---------------------------------------------------------------- backfill
-
-BACKFILL_EVENTS = 160_000
-BACKFILL_EPOCHS = 4
-NOMINAL_BACKFILL_S = 8.0
-
-
-def backfill(run: Run) -> None:
-    """Bulk initial sync: the whole log replayed in BACKFILL_EPOCHS large
-    epochs into an empty 16-bucket copy-on-write table, repeated."""
-    from rook_spark.sources import read_events_parquet
-
-    log = os.path.join(run.work, "log")
-    t0 = time.perf_counter()
-    files, = _generate(run, BACKFILL_EVENTS, [(log, BACKFILL_EPOCHS)])
-    run.setup_parts["gen_s"] = time.perf_counter() - t0
-
-    def warm():
-        # the starting state is an empty table, so the preparation is a
-        # cold one-epoch backfill into a scratch table (the warm-up)
-        eng = _engine(run, fresh_dir(os.path.join(run.work, "prep")))
-        eng.replay(read_events_parquet(run.spark, files[0]))
-
-    _prepare(run, warm)
-    rows = {f: _rows(f) for f in files}
-    reps = max(1, round(run.seconds / NOMINAL_BACKFILL_S))
-    epoch_s, backfill_s, events = [], [], 0
-    eng = None
-    t_timed = time.perf_counter()
-    with run.timed("backfill"):
-        for r in range(reps):
-            eng = _engine(run, fresh_dir(os.path.join(run.work, f"table-{r}")))
-            t_rep = time.perf_counter()
-            for f in files:
-                t_ep = time.perf_counter()
-                stats = run.attempt(lambda f=f: eng.replay(read_events_parquet(run.spark, f)),
-                                    f"epoch {f}")
-                epoch_s.append(time.perf_counter() - t_ep)
-                if stats is not None:
-                    events += rows[f]
-            backfill_s.append(time.perf_counter() - t_rep)
-    run.extra["timed_s"] = time.perf_counter() - t_timed
-    run.metric("events_per_s", events / sum(epoch_s), "1/s", len(epoch_s))
-    run.timed_metric("epoch_s", epoch_s)
-    run.timed_metric("latency_s", backfill_s)
-    table = eng.target()
-    run.final_state(table, files)
-    run.extra["table_dirs"] = [os.path.join(run.work, f"table-{r}") for r in range(reps)]
-    run.extra["applied_files"] = files * reps
-
-
-def _rows(path: str) -> int:
-    """Event count of one log file, from its parquet footer."""
-    import pyarrow.parquet as pq
-
-    return pq.ParquetFile(path).metadata.num_rows
-
-
 # -------------------------------------------------------------------- tail
 
-TAIL_PRELOAD = 8_000
-TAIL_CHUNK = 4_000
-# events/s offered: well under the closed-loop capacity (about 2.8k
-# events/s on a 4-vCPU host, and half that when the host is loaded), so
-# a slow host lengthens freshness instead of building an unbounded backlog
-TAIL_RATE = 1_000.0
-TAIL_MIN_CHUNKS = 3
-TAIL_WARMUP_CHUNKS = 2     # preload + 2 chunks reach depth 3: one compaction
-TAIL_COMPACT_DEPTH = 3
+TAIL_PRELOAD = 4_000
+TAIL_CHUNK = 250
+# a compaction every 4th trigger: a minority of the samples, and the one
+# trigger it delays (the next chunk waits for it) is a minority too
+TAIL_COMPACT_DEPTH = 4
+# the preload leaves every bucket at delta depth 1, so the warm-up's last
+# chunk brings the first (cold) compaction and the timed region starts
+# on a fresh compaction period
+TAIL_WARMUP_CHUNKS = TAIL_COMPACT_DEPTH - 1
+# one chunk released every 2.5 s (100 events/s): an epoch takes ~1.4 s
+# and a compacting one ~3.2 s on a 4-vCPU host, so the schedule offers
+# about three quarters of the closed-loop capacity and a stall delays
+# only the chunk behind it
+TAIL_INTERVAL_S = 2.5
 TAIL_DRAIN_TIMEOUT_S = 60.0
 
 
@@ -269,12 +223,13 @@ class _Progress:
 def tail(run: Run) -> None:
     """Streaming tail: a merge-on-read table preloaded with the head of
     the log; the rest arrives as chunk files released on an open-loop
-    schedule (TAIL_RATE) and tailed by CdcEngine.stream, one file per
-    trigger. Freshness is timed from each chunk's scheduled release, so
-    a stall also delays the chunks behind it."""
+    schedule (one per TAIL_INTERVAL_S) and tailed by CdcEngine.stream,
+    one file per trigger. Freshness is timed from each chunk's scheduled
+    release, so a stall also delays the chunk behind it."""
     from rook_spark.sources import read_events_parquet
 
-    n_timed = max(TAIL_MIN_CHUNKS, round(run.seconds * TAIL_RATE / TAIL_CHUNK))
+    period_s = TAIL_COMPACT_DEPTH * TAIL_INTERVAL_S
+    n_timed = TAIL_COMPACT_DEPTH * max(1, round(run.seconds / period_s))
     n_chunks = TAIL_WARMUP_CHUNKS + n_timed
     n_events = TAIL_PRELOAD + n_chunks * TAIL_CHUNK
     pre_dir = os.path.join(run.work, "preload")
@@ -314,13 +269,12 @@ def tail(run: Run) -> None:
                 raise RuntimeError(f"warm-up chunk {i} not applied")
         run.setup_parts["warmup_s"] = time.perf_counter() - t_warm
 
-        interval = TAIL_CHUNK / TAIL_RATE
         due, late, backlog = [], [], []
         run.extra["first_timed_batch"] = TAIL_WARMUP_CHUNKS
         with run.timed("tail"):
             t_start = time.time()
             for j in range(n_timed):
-                t_due = t_start + j * interval
+                t_due = t_start + j * TAIL_INTERVAL_S
                 pause = t_due - time.time()
                 if pause > 0:
                     time.sleep(pause)
@@ -344,7 +298,6 @@ def tail(run: Run) -> None:
         if r["run_id"] == os.path.abspath(ckpt)
     }
     fresh, trig = [], []
-    events = 0
     for j in range(n_timed):
         b = TAIL_WARMUP_CHUNKS + j
         run.attempted += 1
@@ -354,19 +307,16 @@ def tail(run: Run) -> None:
             continue
         fresh.append(committed[b] - due[j])
         trig.append(p["duration_ms"].get("triggerExecution", 0) / 1000.0)
-        events += p["rows"]
     if not drained:
         run.errors.append("stream did not drain within the timeout")
     run.extra["timed_s"] = t_end - t_start
     run.extra["progress"] = {b: progress.by_batch[b] for b in sorted(progress.by_batch)}
     run.extra["generator_late_s"] = late
     run.extra["backlog_files"] = backlog
-    run.metric("events_per_s", events / sum(trig) if trig else 0.0, "1/s", len(trig))
     run.timed_metric("epoch_s", trig)
     run.timed_metric("freshness_s", fresh)
-    run.timed_metric("latency_s", fresh)
-    run.metric("generator_late_s_max", max(late) if late else 0.0, "s", len(late))
-    run.metric("generator_late_s_p50", statistics.median(late) if late else 0.0, "s", len(late))
+    run.metric("generator_late_s_max", max(late), "s", len(late))
+    run.metric("generator_late_s_p50", statistics.median(late), "s", len(late))
     run.final_state(table, pre_files + released)
     run.extra["table_dirs"] = [table.path]
     run.extra["applied_files"] = released[TAIL_WARMUP_CHUNKS:]
@@ -375,8 +325,13 @@ def tail(run: Run) -> None:
 # ------------------------------------------------------------------- serve
 
 SERVE_PRELOAD = 2_000
-SERVE_SLICE = 1_000
-SERVE_COMPACT_DEPTH = 4
+SERVE_SLICE = 500
+# the preload leaves delta depth 1, so the cycles of one compaction
+# period read at depth 2, then 0 (the epoch that reached depth 3
+# compacted), then 1
+SERVE_COMPACT_DEPTH = 3
+# one cycle (a sink epoch and a read-mix pass) on a 4-vCPU host; the
+# sink's fan-out costs about 4 s per epoch whatever the slice size
 NOMINAL_CYCLE_S = 10.0
 HOT_REPO = "repo-0000"   # the power-law head of generate_events
 READS = ("point", "hot_agg", "row_count", "changes", "lookup")
@@ -447,21 +402,23 @@ def _read_mix(table, idx, key: tuple[str, str], v_from: int) -> list[tuple[str, 
 def serve(run: Run) -> None:
     """Closed-loop client over a small merge-on-read table with the
     InvertedIndex full-text sink attached: each cycle replays a
-    SERVE_SLICE-event epoch, then issues a fixed read mix (key point
-    lookup, hot-repo aggregate, row_count(), changes() over the last
-    epoch, index lookup)."""
+    SERVE_SLICE-event epoch, then makes one pass over a fixed read mix
+    (key point lookup, hot-repo aggregate, row_count(), changes() over
+    the last epoch, index lookup). The cycles cover whole compaction
+    periods, so delta depth rises and falls within every run."""
     from rook_spark.cdc.fulltext import InvertedIndex
     from rook_spark.sources import read_events_parquet
 
-    n_cycles = max(1, round(run.seconds / NOMINAL_CYCLE_S))
+    period_s = SERVE_COMPACT_DEPTH * NOMINAL_CYCLE_S
+    n_cycles = SERVE_COMPACT_DEPTH * max(1, round(run.seconds / period_s))
     n_events = SERVE_PRELOAD + n_cycles * SERVE_SLICE
     pre_dir = os.path.join(run.work, "preload")
     slices_dir = os.path.join(run.work, "slices")
     t0 = time.perf_counter()
     pre_files, slices = _generate(
         run, n_events, [(pre_dir, SERVE_PRELOAD // SERVE_SLICE), (slices_dir, n_cycles)])
+    # keys[0] is read in the warm-up, keys[i + 1] in cycle i
     keys = _probe_keys(pre_files[-1:] + slices)
-    rows = [_rows(f) for f in slices]
     run.setup_parts["gen_s"] = time.perf_counter() - t0
 
     def build():
@@ -474,9 +431,9 @@ def serve(run: Run) -> None:
         eng.replay(read_events_parquet(run.spark, pre_dir))
         return eng, idx
 
-    # the preload's replay warms the sink path; one untimed read mix warms
-    # the reads
     eng, idx = _prepare(run, build)
+    # the preload's replay warms the sink path; one untimed read-mix pass
+    # warms the reads
     t_warm = time.perf_counter()
     table = eng.target()
     for _, read in _read_mix(table, idx, keys[0], table.current_version() - 1):
@@ -485,35 +442,31 @@ def serve(run: Run) -> None:
 
     reads: dict[str, list[float]] = {k: [] for k in READS}
     replay_s: list[float] = []
+    pass_s: list[float] = []
     depth: list[int] = []
-    events = 0
     t_timed = time.perf_counter()
     with run.timed("serve"):
         for i, path in enumerate(slices):
             v_before = eng.target().current_version()
             t_ep = time.perf_counter()
             with _span(run, "bench.serve.replay"):
-                stats = run.attempt(
-                    lambda path=path: eng.replay(read_events_parquet(run.spark, path)),
-                    f"replay slice {i}")
+                run.attempt(lambda path=path: eng.replay(read_events_parquet(run.spark, path)),
+                            f"replay slice {i}")
             replay_s.append(time.perf_counter() - t_ep)
-            if stats is not None:
-                events += rows[i]
             table = eng.target()
             if run.tracer is not None:
                 snap = table.snapshot()
                 depth.append(max((len(fs) for fs in snap.deltas.values()), default=0))
+            t_pass = time.perf_counter()
             for name, read in _read_mix(table, idx, keys[i + 1], v_before):
                 t_rd = time.perf_counter()
                 with _span(run, f"bench.serve.read.{name}"):
                     run.attempt(read, f"read {name} cycle {i}")
                 reads[name].append(time.perf_counter() - t_rd)
+            pass_s.append(time.perf_counter() - t_pass)
     run.extra["timed_s"] = time.perf_counter() - t_timed
-    all_reads = [x for v in reads.values() for x in v]
-    run.metric("events_per_s", events / sum(replay_s), "1/s", len(replay_s))
     run.timed_metric("epoch_s", replay_s)
-    run.timed_metric("read_s", all_reads)
-    run.timed_metric("latency_s", all_reads)
+    run.timed_metric("read_mix_s", pass_s)
     for name, v in reads.items():
         run.timed_metric(f"read_{name}_s", v)
     run.extra["delta_depth"] = depth
@@ -523,4 +476,4 @@ def serve(run: Run) -> None:
     run.extra["applied_files"] = slices
 
 
-WORKLOADS = {"backfill": backfill, "tail": tail, "serve": serve}
+WORKLOADS = {"tail": tail, "serve": serve}
