@@ -10,9 +10,11 @@ the traced run's counts repeat exactly.
 Sizes are set for a 4-vCPU host, where an epoch of either workload costs
 about a second of fixed Spark work whatever its size; the nominal
 durations below convert ``--seconds`` into a number of work units at
-roughly the speed of that host. Both workloads time a whole number of
-merge-on-read compaction periods, so every run's samples have the same
-mix of compacting and plain epochs and the medians fall on plain ones.
+roughly the speed of that host. Every run's samples have the same mix
+of compacting and plain merge-on-read epochs: tail times whole
+compaction periods, so its medians fall on plain epochs; serve's cycles
+start and end on a compacting epoch, so its epoch median is a
+compacting epoch and its read-mix median a pass at delta depth 0.
 """
 
 from __future__ import annotations
@@ -131,11 +133,11 @@ def _chunks(path: str) -> list[str]:
     return sorted(glob.glob(os.path.join(path, "chunk-*.parquet")))
 
 
-def _engine(run: Run, path: str, **kw):
+def _engine(run: Run, path: str, n_buckets: int = N_BUCKETS, **kw):
     from rook_spark.cdc.engine import CdcEngine
     from rook_spark.cdc.fixtures import IGNORED_SERVER_ID
 
-    return CdcEngine(run.spark, path, n_buckets=N_BUCKETS, **kw).ignoring_servers(IGNORED_SERVER_ID)
+    return CdcEngine(run.spark, path, n_buckets=n_buckets, **kw).ignoring_servers(IGNORED_SERVER_ID)
 
 
 def _prepare(run: Run, build):
@@ -324,15 +326,21 @@ def tail(run: Run) -> None:
 
 # ------------------------------------------------------------------- serve
 
-SERVE_PRELOAD = 2_000
+SERVE_PRELOAD = 500
 SERVE_SLICE = 500
-# the preload leaves delta depth 1, so the cycles of one compaction
-# period read at depth 2, then 0 (the epoch that reached depth 3
-# compacted), then 1
-SERVE_COMPACT_DEPTH = 3
+# a small table: four buckets, one per core, for the table and the index
+SERVE_BUCKETS = 4
+# a compaction every other epoch. The preload (a plain epoch, cold)
+# leaves delta depth 1; the warm-up's first epoch reaches depth 2 and
+# compacts, a read-mix pass follows at depth 0, and its second epoch is
+# plain again. The timed cycles then alternate compacting epochs
+# followed by reads at depth 0 and plain epochs followed by reads at
+# depth 1, every kind of step having run warm at least once.
+SERVE_COMPACT_DEPTH = 2
+SERVE_WARMUP_SLICES = 2
 # one cycle (a sink epoch and a read-mix pass) on a 4-vCPU host; the
 # sink's fan-out costs about 4 s per epoch whatever the slice size
-NOMINAL_CYCLE_S = 10.0
+NOMINAL_CYCLE_S = 7.0
 HOT_REPO = "repo-0000"   # the power-law head of generate_events
 READS = ("point", "hot_agg", "row_count", "changes", "lookup")
 
@@ -404,40 +412,44 @@ def serve(run: Run) -> None:
     InvertedIndex full-text sink attached: each cycle replays a
     SERVE_SLICE-event epoch, then makes one pass over a fixed read mix
     (key point lookup, hot-repo aggregate, row_count(), changes() over
-    the last epoch, index lookup). The cycles cover whole compaction
-    periods, so delta depth rises and falls within every run."""
+    the last epoch, index lookup). An untimed warm-up (two sink epochs,
+    the first of which compacts, and a read-mix pass) runs every kind of
+    timed step once; there are at least three cycles, so delta depth
+    rises and falls within every run."""
     from rook_spark.cdc.fulltext import InvertedIndex
     from rook_spark.sources import read_events_parquet
 
-    period_s = SERVE_COMPACT_DEPTH * NOMINAL_CYCLE_S
-    n_cycles = SERVE_COMPACT_DEPTH * max(1, round(run.seconds / period_s))
-    n_events = SERVE_PRELOAD + n_cycles * SERVE_SLICE
+    n_cycles = max(3, round(run.seconds / NOMINAL_CYCLE_S))
+    n_slices = SERVE_WARMUP_SLICES + n_cycles
+    n_events = SERVE_PRELOAD + n_slices * SERVE_SLICE
     pre_dir = os.path.join(run.work, "preload")
     slices_dir = os.path.join(run.work, "slices")
     t0 = time.perf_counter()
     pre_files, slices = _generate(
-        run, n_events, [(pre_dir, SERVE_PRELOAD // SERVE_SLICE), (slices_dir, n_cycles)])
+        run, n_events, [(pre_dir, SERVE_PRELOAD // SERVE_SLICE), (slices_dir, n_slices)])
+    warm, timed = slices[:SERVE_WARMUP_SLICES], slices[SERVE_WARMUP_SLICES:]
     # keys[0] is read in the warm-up, keys[i + 1] in cycle i
-    keys = _probe_keys(pre_files[-1:] + slices)
+    keys = _probe_keys(warm[:1] + timed)
     run.setup_parts["gen_s"] = time.perf_counter() - t0
 
     def build():
         # the sink is attached before the preload: the index is built by
         # the same incremental path the timed epochs use
-        idx = InvertedIndex(run.spark, os.path.join(run.work, "index"), n_buckets=N_BUCKETS)
-        eng = _engine(run, os.path.join(run.work, "table"), write_mode="mor",
-                      compact_depth=SERVE_COMPACT_DEPTH, n_source_partitions=N_SOURCE_PARTITIONS)
+        idx = InvertedIndex(run.spark, os.path.join(run.work, "index"), n_buckets=SERVE_BUCKETS)
+        eng = _engine(run, os.path.join(run.work, "table"), n_buckets=SERVE_BUCKETS,
+                      write_mode="mor", compact_depth=SERVE_COMPACT_DEPTH,
+                      n_source_partitions=N_SOURCE_PARTITIONS)
         eng.with_sink("fulltext_index", idx.sink(), when="before")
         eng.replay(read_events_parquet(run.spark, pre_dir))
         return eng, idx
 
     eng, idx = _prepare(run, build)
-    # the preload's replay warms the sink path; one untimed read-mix pass
-    # warms the reads
     t_warm = time.perf_counter()
-    table = eng.target()
-    for _, read in _read_mix(table, idx, keys[0], table.current_version() - 1):
+    v_before = eng.target().current_version()
+    eng.replay(read_events_parquet(run.spark, warm[0]))
+    for _, read in _read_mix(eng.target(), idx, keys[0], v_before):
         read()
+    eng.replay(read_events_parquet(run.spark, warm[1]))
     run.setup_parts["warmup_s"] = time.perf_counter() - t_warm
 
     reads: dict[str, list[float]] = {k: [] for k in READS}
@@ -446,7 +458,7 @@ def serve(run: Run) -> None:
     depth: list[int] = []
     t_timed = time.perf_counter()
     with run.timed("serve"):
-        for i, path in enumerate(slices):
+        for i, path in enumerate(timed):
             v_before = eng.target().current_version()
             t_ep = time.perf_counter()
             with _span(run, "bench.serve.replay"):
@@ -473,7 +485,7 @@ def serve(run: Run) -> None:
     table = eng.target()
     run.final_state(table, pre_files + slices)
     run.extra["table_dirs"] = [table.path]
-    run.extra["applied_files"] = slices
+    run.extra["applied_files"] = timed
 
 
 WORKLOADS = {"tail": tail, "serve": serve}
